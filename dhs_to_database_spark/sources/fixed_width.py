@@ -8,11 +8,21 @@ field's name/start/len.
 Spark-first design: this is a *scan + N-way projection, partitioned by tag*.
 
 - ``spark.read.text`` gives one string column per line; the record-type tag
-  is a ``substring`` — a pure narrow op, no shuffle, fully codegen'd.
-- Per record type we generate a *select list* of ``substring(...)``
-  projections from the (tiny, driver-held) spec — the analogue of the
-  reference's pre-grouped field dict (DAT_Parser.py:51-56) is a compiled
-  Catalyst projection instead of a per-row Python loop.
+  is a ``substring`` — a pure narrow op, no shuffle.
+- Per record type the (tiny, driver-held) spec is rendered into ONE SQL
+  expression — the analogue of the reference's pre-grouped field dict
+  (DAT_Parser.py:51-56). A ``transform`` over a literal array of
+  ``(start, len)`` pairs cuts every field of a line into one array, and the
+  named columns (or the packed ``data`` map) index into that array. The
+  driver cost is a constant handful of JVM calls whatever the field count;
+  a 520-field record no longer builds 520 ``Column`` objects.
+- Byte-offset slicing: positions are characters (the reference slices a
+  Python ``str``). On a line whose byte count equals its character count —
+  an ASCII-only line, ``octet_length(value) = length(value)`` — a field is
+  a ``substring`` of the line's bytes, O(1) to locate. Equal counts mean
+  every character is one byte, so byte and character offsets coincide and
+  both slices agree. Other lines keep the character ``substring``, which
+  walks the line from its start per field.
 - Whitespace rule (DAT_Parser.py:87-105): every field is right/left-trimmed
   EXCEPT ``CASEID``/``HHID`` whose fixed-width padding is part of the key
   (HHID = CASEID minus last 3 chars — trimming would break referential
@@ -109,29 +119,75 @@ def read_tagged_lines(spark: SparkSession, path: str | list[str], spec: DatSpec)
     )
 
 
-def project_record(tagged: DataFrame, rec: RecordSpec) -> DataFrame:
+def _sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def project_record(tagged: DataFrame, rec: RecordSpec, packed: bool = False) -> DataFrame:
     """Select one record type's rows and split them into named columns.
+
+    The whole projection is one SQL expression rendered from the spec: a
+    ``transform`` over the literal ``(start, len)`` array cuts every field
+    of the line — by byte offset on ASCII-only lines, by character
+    otherwise (see the module docstring) — and each output column indexes
+    into that array. Item names reach the SQL only as string literals
+    (struct field names and map keys), so no item name can collide with
+    the helper columns.
 
     NULL rule (pinned; SURVEY §7 item 5): a non-key field that trims to
     the empty string loads as NULL — the reference's table-load path COPYs
     with ``null=''`` (lib04:432-434), so '' and SQL NULL are the same
     storage state there and we normalize to NULL at demux time. Keys
     (CASEID/HHID) are exempt: they are never trimmed and never nulled,
-    their padding being part of the key. The one deliberate asymmetry is
-    the JSON/map-packed path, where absent values are the empty STRING
-    (reference ``fillna('')`` lib04:455) — see
-    ``plans.schema_evolution.pack_wide_table``. Property-tested end-to-end
-    in tests/test_properties.py.
+    their padding being part of the key.
+
+    ``packed=True`` gives the JSON-table shape of ``pack_wide_table``
+    directly: key columns (``is_key_column``) first-class under the rule
+    above, every other field in one ``data`` map<string,string> whose
+    absent values are the empty STRING (reference ``fillna('')``
+    lib04:455). Property-tested end-to-end in tests/test_properties.py.
     """
-    cols = []
-    for fspec in rec.fields:
-        c = F.substring("value", fspec.start, fspec.length)
-        if fspec.name not in NO_TRIM_KEYS:
-            c = F.nullif(F.trim(c), F.lit(""))
-        cols.append(c.alias(fspec.name))
-    return tagged.filter(F.col("record_type") == rec.record_type_value).select(
-        "surveyid", *cols
+    columns, payload = rec.fields, ()
+    if packed:
+        from ..plans.schema_evolution import is_key_column
+
+        columns = tuple(f for f in rec.fields if is_key_column(f.name))
+        payload = tuple(f for f in rec.fields if not is_key_column(f.name))
+    spans = "array(" + ", ".join(
+        f"named_struct('s', {f.start}, 'l', {f.length})" for f in columns + payload
+    ) + ")"
+    # ``__line_bytes`` is referenced twice below, so the optimizer keeps it
+    # in its own projection: the cast runs once per line, not per field.
+    lines = tagged.filter(F.col("record_type") == rec.record_type_value).selectExpr(
+        "surveyid",
+        "value",
+        "IF(octet_length(value) = length(value), CAST(value AS BINARY), NULL)"
+        " AS __line_bytes",
     )
+    cut = lines.selectExpr(
+        "surveyid",
+        f"IF(__line_bytes IS NULL,"
+        f" transform({spans}, p -> substring(value, p.s, p.l)),"
+        f" transform({spans}, p -> CAST(substring(__line_bytes, p.s, p.l) AS STRING)))"
+        " AS __fields",
+    )
+    cols = []
+    for i, f in enumerate(columns):
+        value = f"__fields[{i}]"
+        if f.name not in NO_TRIM_KEYS:
+            value = f"nullif(trim({value}), '')"
+        cols.append(f"{_sql_string(f.name)}, {value}")
+    if packed:
+        names = ", ".join(_sql_string(f.name) for f in payload)
+        cols.append(
+            f"'data', map_from_arrays(array({names}), transform("
+            f"slice(__fields, {len(columns) + 1}, {len(payload)}),"
+            " v -> coalesce(trim(v), '')))"
+        )
+    return cut.selectExpr(
+        "surveyid", f"named_struct({', '.join(cols)}) AS __record"
+    ).select("surveyid", "__record.*")
 
 
 def demux_dat(
@@ -184,20 +240,18 @@ def demux_to_parquet(
     ``should_pack_as_map`` is called with label=None here and that
     predicate stays with the schema-evolution path) is written PACKED —
     key columns stay first-class, the payload collapses into one
-    ``data`` map<string,string> column (``pack_wide_table``, the
-    Spark-native jsonb). Same narrow shuffle-free plan: the pack is a
-    projection."""
+    ``data`` map<string,string> column, the Spark-native jsonb.
+    ``project_record(packed=True)`` builds that map straight from the
+    line's field array, the shape ``pack_wide_table`` gives for the
+    columnar demux. Same narrow shuffle-free plan: the pack is part of
+    the one projection."""
     tagged = read_tagged_lines(spark, path, spec).cache()
     try:
         out = {}
         packed = packed_record_names(spec) if pack_wide else set()
         for rec in spec.records.values():
             dest = f"{out_dir}/{rec.record_name}"
-            df = project_record(tagged, rec)
-            if rec.record_name in packed:
-                from ..plans.schema_evolution import pack_wide_table
-
-                df = pack_wide_table(df)
+            df = project_record(tagged, rec, packed=rec.record_name in packed)
             if sink_format == "parquet":
                 df.write.mode(mode).partitionBy("surveyid").parquet(dest)
                 out[rec.record_name] = dest

@@ -81,12 +81,17 @@ def parse_download_manifest(spark: SparkSession, path: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def list_zips(spark: SparkSession, folder: str) -> DataFrame:
-    """All ``*.zip`` files in ``folder`` (case-insensitive), one row each."""
-    names = [
+def _zip_names(folder: str) -> list[str]:
+    """Names of the ``*.zip`` files in ``folder`` (case-insensitive)."""
+    return [
         f for f in os.listdir(folder)
         if os.path.isfile(os.path.join(folder, f)) and f.lower().endswith(".zip")
     ]
+
+
+def list_zips(spark: SparkSession, folder: str) -> DataFrame:
+    """All ``*.zip`` files in ``folder`` (case-insensitive), one row each."""
+    names = _zip_names(folder)
     if not names:
         return spark.createDataFrame([], "filename string, path string")
     return spark.createDataFrame(
@@ -123,12 +128,12 @@ def stage_batch(
 
 def stage_manual(spark: SparkSession, downloads_folder: str, staging_folder: str) -> list[str]:
     """Manual mode: surveyid is the filename's first dot-component
-    (lib02:79-92)."""
-    disk = list_zips(spark, downloads_folder)
+    (lib02:79-92). The listing is driver-side, so no Spark job runs."""
     staged: list[str] = []
-    for row in disk.collect():
-        sid = os.path.basename(row["path"]).split(".")[0]
-        staged.extend(stage_zip(row["path"], sid, os.path.join(staging_folder, "downloaded")))
+    for name in _zip_names(downloads_folder):
+        sid = name.split(".")[0]
+        staged.extend(stage_zip(os.path.join(downloads_folder, name), sid,
+                                os.path.join(staging_folder, "downloaded")))
     return staged
 
 

@@ -226,3 +226,71 @@ def test_pack_threshold_counts_payload_not_keys():
         },
     )
     assert packed_record_names(spec) == {"OVER"}
+
+
+def test_packed_demux_matches_pack_wide_table(spark, tmp_path):
+    """The packed shape ``demux_to_parquet`` builds straight from each
+    line's field array equals ``pack_wide_table`` over the columnar demux:
+    same columns in the same order, CASEID untrimmed, '' inside ``data``
+    and NULL in a blank key column exactly where the columnar path puts
+    them — including an item name that needs SQL quoting."""
+    from dhs_to_database_spark.plans.schema_evolution import pack_wide_table
+    from dhs_to_database_spark.sources.fixed_width import (
+        DatSpec,
+        FieldSpec,
+        RecordSpec,
+        packed_record_names,
+        project_record,
+        read_tagged_lines,
+    )
+
+    n_payload = 501
+    odd_name = "WP'Q \\1"  # quote, space and backslash
+    fields = (
+        FieldSpec("CASEID", 1, 15),
+        FieldSpec("WIDX01", 19, 2),  # 'idx' -> key column, stays first-class
+        FieldSpec(odd_name, 21, 2),
+    ) + tuple(FieldSpec(f"WP{i:03d}", 23 + i, 1) for i in range(n_payload - 1))
+    spec = DatSpec(rt_start=16, rt_len=3, records={"W50": RecordSpec("WREC5", "W50", fields)})
+    assert packed_record_names(spec) == {"WREC5"}
+
+    caseid = f"{902:>4}{3:>11}"
+    payload = "".join(str(i % 10) for i in range(n_payload - 1))
+    blanks = "".join(" " if i % 7 == 0 else str(i % 10) for i in range(n_payload - 1))
+    lines = [
+        f"{caseid}W50 1 x{payload}",
+        f"{caseid[:-1]}9W50  é {blanks}",  # blank key, non-ASCII, blank fields
+        f"{caseid[:-1]}8W50 2",  # short line: the payload is past its end
+    ]
+    path = tmp_path / "902.W.dat"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+    columnar = demux_dat(spark, str(path), spec)["WREC5"]
+    want_frame = pack_wide_table(columnar)
+    tagged = read_tagged_lines(spark, str(path), spec)
+    got_frame = project_record(tagged, spec.records["W50"], packed=True)
+    assert got_frame.columns == want_frame.columns == ["surveyid", "CASEID", "WIDX01", "data"]
+
+    out = demux_to_parquet(spark, str(path), spec, str(tmp_path / "wh"))
+    got = spark.read.parquet(out["WREC5"])
+    want_frame.write.partitionBy("surveyid").parquet(str(tmp_path / "want"))
+    want = spark.read.parquet(str(tmp_path / "want"))
+    assert got.columns == want.columns
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted(
+            (r["surveyid"], r["CASEID"], r["WIDX01"], sorted(r["data"].items()))
+            for r in df.collect()
+        )
+
+    assert rows(got) == rows(want)
+    by_case = {r["CASEID"]: r for r in got.collect()}
+    full, blank, short = (by_case[c] for c in (caseid, caseid[:-1] + "9", caseid[:-1] + "8"))
+    assert full["WIDX01"] == "1" and full["data"][odd_name] == "x"
+    assert full["data"]["WP000"] == "0"
+    assert blank["WIDX01"] is None  # blank key: NULL, as the columnar path
+    assert blank["data"][odd_name] == "é"
+    assert blank["data"]["WP000"] == ""  # blank payload: '' inside data
+    assert short["WIDX01"] == "2" and set(short["data"].values()) == {""}
+    assert len(full["data"]) == n_payload

@@ -15,6 +15,8 @@ from dhs_to_database_spark.sources.fixed_width import (
     FieldSpec,
     RecordSpec,
     demux_dat,
+    project_record,
+    read_tagged_lines,
 )
 
 # ---------------------------------------------------------------------------
@@ -108,6 +110,97 @@ def test_fixed_width_roundtrip(spark, tmp_path_factory, case):
             (tuple(g[f.name] for f in rec.fields) for g in got), key=nullsafe
         )
         assert got_sorted == want
+
+
+# ---------------------------------------------------------------------------
+# Multi-byte round-trip: ASCII and non-ASCII lines mixed in one file. The
+# demux slices ASCII-only lines by byte offset and the rest by character, so
+# both kinds must come back as Python ``str`` slices of the line, in the
+# columnar shape and in the packed (key columns + ``data`` map) shape.
+# ---------------------------------------------------------------------------
+
+#: 1-byte, 2-byte (é ñ), 3-byte (€ 中) and 4-byte (😀 𝄞) UTF-8 characters
+_MB_CHARS = _VAL_CHARS + "éñ€中😀𝄞"
+
+
+@st.composite
+def multibyte_case(draw):
+    n_fields = draw(st.integers(2, 6))
+    widths = draw(st.lists(st.integers(1, 5), min_size=n_fields, max_size=n_fields))
+    names = [f"F{i}" for i in range(n_fields)]
+    names[0] = draw(st.sampled_from(["CASEID", "F0"]))
+    if n_fields > 2 and draw(st.booleans()):
+        names[1] = "HHIDX"  # a key column in the packed shape
+    start, fields = 4, []
+    for name, w in zip(names, widths):
+        fields.append(FieldSpec(name, start, w))
+        start += w
+    spec = DatSpec(rt_start=1, rt_len=3, records={"R00": RecordSpec("REC", "R00", tuple(fields))})
+    lines = []
+    # line 0 is ASCII-only and line 1 carries a multi-byte character, so
+    # every file mixes both kinds of line
+    for i in range(draw(st.integers(2, 6))):
+        vals = [
+            draw(st.text(_VAL_CHARS if i == 0 or k < 2 else _MB_CHARS, max_size=f.length))
+            for k, f in enumerate(fields)
+        ]
+        if i == 1:  # the last field is never a key
+            vals[-1] = draw(st.sampled_from("éñ€中😀𝄞")) + vals[-1][1:]
+        line = "R00" + "".join(v.ljust(f.length) for f, v in zip(fields, vals))
+        if draw(st.booleans()):
+            line = line.rstrip()  # short line: trailing fields past its end
+        lines.append(line)
+    return spec, lines
+
+
+@given(multibyte_case())
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_fixed_width_multibyte_matches_str_slicing(spark, tmp_path_factory, case):
+    from dhs_to_database_spark.plans.schema_evolution import is_key_column
+
+    spec, lines = case
+    rec = spec.records["R00"]
+    assert any(line.isascii() for line in lines)
+    assert not all(line.isascii() for line in lines)
+    path = tmp_path_factory.mktemp("dat") / "778.PROP.DAT"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+    def cut(line, f):
+        raw = line[f.start - 1 : f.start - 1 + f.length]
+        return raw if f.name in ("CASEID", "HHID") else (raw.strip() or None)
+
+    def key(row):
+        return tuple((v is None, str(v)) for v in row)
+
+    columnar = demux_dat(spark, str(path), spec)["REC"]
+    want = sorted((tuple(cut(ln, f) for f in rec.fields) for ln in lines), key=key)
+    got = sorted((tuple(r[f.name] for f in rec.fields) for r in columnar.collect()), key=key)
+    assert got == want
+
+    keys = [f for f in rec.fields if is_key_column(f.name)]
+    payload = [f for f in rec.fields if not is_key_column(f.name)]
+    packed = project_record(read_tagged_lines(spark, str(path), spec), rec, packed=True)
+    assert packed.columns == ["surveyid", *(f.name for f in keys), "data"]
+    want = sorted(
+        (
+            tuple(cut(ln, f) for f in keys)
+            + (sorted((f.name, cut(ln, f) or "") for f in payload),)
+            for ln in lines
+        ),
+        key=key,
+    )
+    got = sorted(
+        (
+            tuple(r[f.name] for f in keys) + (sorted(r["data"].items()),)
+            for r in packed.collect()
+        ),
+        key=key,
+    )
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from dhs_to_database_spark.sources.staging import (
     reconcile_downloads,
     sniff_encoding,
     stage_batch,
+    stage_manual,
     stage_zip,
 )
 
@@ -66,6 +67,28 @@ def test_manifest_parse_and_reconcile(spark, tmp_path):
 
     staged = stage_batch(spark, str(manifest), str(tmp_path), str(tmp_path / "stg"))
     assert [p.split("/")[-1] for p in staged] == ["511.ZZIR71.DCF"]
+
+
+def test_stage_manual_runs_no_spark_job(spark, tmp_path):
+    """Manual mode takes the surveyid from each zip's first dot-component
+    and stages from the driver-side listing alone: no Spark job runs."""
+    downloads = tmp_path / "dl"
+    downloads.mkdir()
+    _make_zip(downloads / "511.ZZIR71DT.ZIP", {"ZZIR71.DCF": "x"})
+    _make_zip(downloads / "42.aabr20dt.zip", {"AABR20.DAT": "y"})  # lowercase
+    (downloads / "notes.txt").write_text("not a zip")
+    tracker = spark.sparkContext.statusTracker()
+    group = "stage-manual-test"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        staged = stage_manual(spark, str(downloads), str(tmp_path / "stg"))
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert sorted("/".join(p.split("/")[-2:]) for p in staged) == [
+        "42/42.AABR20.DAT",
+        "511/511.ZZIR71.DCF",
+    ]
 
 
 def test_encoding_fallback(spark, tmp_path):

@@ -10,9 +10,15 @@ padded 15-char CASEID keys, interleaved + a sprinkling of unknown tags).
 Three balanced tiers span 100x total lines (1e5 -> 1e7); a skewed tier
 puts 100:1 of one tier's lines into a single survey.
 
+Each record type's demux is one generated SQL projection: a ``transform``
+over the record's literal (start, len) array cuts the line into a field
+array — by byte offset on ASCII-only lines, by character on the rest —
+and the named columns (or, for the packed WREC5 record, the ``data`` map)
+index into it (``sources.fixed_width.project_record``).
+
 Claims measured and appended to SCALING.md:
-- balanced tiers: flat-or-rising krows/s across 100x (the scan + N
-  codegen'd projections + partitioned write pipeline is linear);
+- balanced tiers: flat-or-rising krows/s across 100x (the scan + one
+  projection per record type + partitioned write pipeline is linear);
 - skew: the 100:1 survey costs ~the same wall time as the balanced corpus
   at equal total lines, because the demux plan has NO shuffle — input
   splits drive task parallelism regardless of surveyid distribution, and
@@ -21,8 +27,8 @@ Claims measured and appended to SCALING.md:
   LOUDLY if skew costs >1.8x balanced, so the claim stays measured, not
   asserted.
 
-Generation is idempotent (skips existing tiers); corpus lives in
-/root/repo/.scale_dat (gitignored).
+Generation is idempotent (skips existing tiers); the corpus lives in
+``.scale_dat`` at the repository root (gitignored).
 
 Usage: python tools/demux_probe.py
 """
