@@ -220,13 +220,12 @@ def demux_to_parquet(
     path: str | list[str],
     spec: DatSpec,
     out_dir: str,
-    mode: str = "overwrite",
-    pack_wide: bool = True,
     sink_format: str = "parquet",
 ) -> dict[str, str]:
     """Demux + write one parquet dataset per record type, partitioned by
-    surveyid (partition-pruned downstream; idempotent per-survey overwrite
-    is the Spark-native version of the reference's drop-and-reload A22).
+    surveyid (partition-pruned downstream). Writes always overwrite:
+    idempotent per-survey overwrite is the Spark-native version of the
+    reference's drop-and-reload A22.
 
     Returns ``{record_name: destination}``. With a non-parquet
     ``sink_format`` (compute-only dry run) nothing lands on disk, so the
@@ -248,12 +247,12 @@ def demux_to_parquet(
     tagged = read_tagged_lines(spark, path, spec).cache()
     try:
         out = {}
-        packed = packed_record_names(spec) if pack_wide else set()
+        packed = packed_record_names(spec)
         for rec in spec.records.values():
             dest = f"{out_dir}/{rec.record_name}"
             df = project_record(tagged, rec, packed=rec.record_name in packed)
             if sink_format == "parquet":
-                df.write.mode(mode).partitionBy("surveyid").parquet(dest)
+                df.write.mode("overwrite").partitionBy("surveyid").parquet(dest)
                 out[rec.record_name] = dest
             else:
                 # compute-only sink (e.g. "noop"): runs the full scan +
@@ -261,7 +260,7 @@ def demux_to_parquet(
                 # dry-run validation and the probe's compute axis. Nothing
                 # lands on disk, so map to "" (ADVICE r9): callers must
                 # not mistake the would-be destination for a real path.
-                df.write.format(sink_format).mode(mode).save()
+                df.write.format(sink_format).mode("overwrite").save()
                 out[rec.record_name] = ""
         return out
     finally:

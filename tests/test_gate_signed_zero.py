@@ -116,7 +116,7 @@ def test_bitwise_probe_untag_keeps_real_bit_diffs_real():
     equivalents (np.int64 is not a Python int subclass)."""
     import numpy as np
 
-    from bitwise_probe import key_cell, untag
+    from invariance_probe import key_cell, untag
 
     # numpy scalar tagging matches Python scalar tagging
     assert key_cell(np.int64(7)) == key_cell(7)
@@ -153,40 +153,31 @@ def test_layout_probe_allowlist_contract():
     count is layout-stable and approx_quantile_calibration is the
     exact, invariant value gate). Every other registered query is
     invariant: 157/157 at sf0.001, 156/157+1-allowed at sf0.01 (r14)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"),
-    )
-    import layout_probe
+    import invariance_probe
 
     import __spark_entry__ as e
 
-    import config_probe
-
     qs = e.queries()
-    # per-tool expected contents: the GK sketch is layout-sensitive
+    # per-mode expected contents: the GK sketch is layout-sensitive
     # (partition merge order feeds the estimate) but CONFIG-invariant
     # (identical input splits produce identical partial sketches
     # whatever the session tuning — verified 157/157 at both SFs), so
     # only the layout allowlist carries it.
     expected = {
-        "layout_probe": (
-            layout_probe.LAYOUT_DEPENDENT_OK,
+        "layout": (
+            invariance_probe.LAYOUT_DEPENDENT_OK,
             {"approx_percentile_orders"},
         ),
-        "config_probe": (config_probe.CONFIG_DEPENDENT_OK, set()),
+        "config": (invariance_probe.CONFIG_DEPENDENT_OK, set()),
     }
-    for tool, (allow, names) in expected.items():
+    for mode, (allow, names) in expected.items():
         for name, reason in allow.items():
-            assert name in qs, f"{tool}: allowlisted unknown query {name!r}"
+            assert name in qs, f"{mode}: allowlisted unknown query {name!r}"
             assert isinstance(reason, str) and len(reason) >= 20, (
-                f"{tool}: allowlist entry {name!r} needs a real reason"
+                f"{mode}: allowlist entry {name!r} needs a real reason"
             )
         assert set(allow) == names, (
-            f"{tool}: new allowlist entries require a documented semantic"
+            f"{mode}: new allowlist entries require a documented semantic"
             " reason AND updating this pin"
         )
     # the sketch query must keep carrying its rows-only registration (the
@@ -195,14 +186,14 @@ def test_layout_probe_allowlist_contract():
 
 
 def test_key_cell_recurses_into_arrays_and_maps():
-    """r14 (found by config_probe): array cells must compare by element
-    bits, not by repr — np.ndarray vs list of identical floats tagged
+    """Found by the config invariance mode: array cells must compare by
+    element bits, not by repr — np.ndarray vs list of identical floats tagged
     differently under the old str() fallback, and numpy's 8-sig-digit
     print precision could make genuinely different floats compare equal.
     Maps key-sort so python dict insertion order cannot leak in."""
     import numpy as np
 
-    from bitwise_probe import key_cell
+    from invariance_probe import key_cell
 
     assert key_cell(np.array([0.1, 0.2])) == key_cell([0.1, 0.2])
     assert key_cell((1, 2.5)) == key_cell([1, 2.5])
@@ -215,3 +206,35 @@ def test_key_cell_recurses_into_arrays_and_maps():
     # maps: order-insensitive, value-bit-sensitive
     assert key_cell({"a": 1, "b": 2.0}) == key_cell({"b": 2.0, "a": 1})
     assert key_cell({"a": 0.0}) != key_cell({"a": -0.0})
+
+
+def test_invariance_probe_layout_mode_smoke(spark):
+    """The harness end to end, in process: the layout mode scrambles the
+    sf0.001 corpus and finds one oracle-backed query bit-identical."""
+    import invariance_probe
+
+    import __spark_entry__ as e
+    from tests.conftest import SF_DIR
+
+    assert "sort_limit" in e.oracle_sql()
+    assert invariance_probe.main(["layout", SF_DIR, "sort_limit"]) == 0
+
+
+def test_invariance_gate_fails_on_any_unallowed_difference():
+    """The shared loop's exit code: equality passes, an allowlisted
+    difference passes as ALLOWED, and any other verdict (LAYOUTDIFF,
+    CONFDIFF, BITFAIL, and NORMONLY too) fails the whole run."""
+    from invariance_probe import _gate
+
+    sides = {"same": ([1], [1]), "diff": ([1], [2])}.get
+
+    def layoutdiff(a, b):
+        return "LAYOUTDIFF", "1 differing rows"
+
+    def normonly(a, b):
+        return "NORMONLY", "int-vs-float tag only"
+
+    assert _gate(["same"], sides, "LAYOUTOK", layoutdiff, allow={}) == 0
+    assert _gate(["same", "diff"], sides, "LAYOUTOK", layoutdiff, allow={}) == 1
+    assert _gate(["diff"], sides, "LAYOUTOK", layoutdiff, allow={"diff": "why"}) == 0
+    assert _gate(["diff"], sides, "BITEXACT", normonly, allow={}) == 1

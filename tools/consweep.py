@@ -2,12 +2,12 @@
 
 Times queries[name](spark, sf_dir) ALONE — the driver-side DataFrame
 construction, including any eager checkpoint/collect jobs the construction
-runs — for every bench query, warm (one throwaway construction per query
-first is NOT done: the session itself is warmed by the table loads and a
-calibration query, and construction is dominated by py4j round-trips that
-do not JIT-warm). Ranks the chattiest constructions so the one-parse
-expression consolidation pattern (guide §1.2 per-task work; r14 item 14)
-can be applied where it pays.
+runs — for every bench query. Only the session is warmed (table loads and
+one calibration query); there is no per-query warm-up construction. Each
+query is constructed n times and the minimum is reported, which absorbs
+first-construction noise (construction is dominated by py4j round-trips,
+which do not JIT-warm). Ranks the chattiest constructions so the one-parse
+expression consolidation pattern can be applied where it pays.
 
 Usage: python tools/consweep.py [--sf SF_DIR] [-n N] [query ...]
        (no query args = the full bench list)

@@ -41,7 +41,6 @@ def main() -> None:
     for run in range(args.n):
         stream = read_events_stream(spark, args.sf)
         if args.which == "sessions":
-            df = stream  # built below
             out_df = session_paths(stream)
             mode = "append"
         else:
@@ -54,26 +53,28 @@ def main() -> None:
             )
             mode = "complete"
 
-        dest = tempfile.mkdtemp(prefix="sp_dest_")
-        ckpt = tempfile.mkdtemp(prefix="sp_ckpt_")
         wmode = "overwrite" if mode == "complete" else "append"
-
-        def write_batch(bdf, _bid):
-            bdf.write.mode(wmode).parquet(dest)
-
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-        t0 = time.time()
-        q = (
-            out_df.writeStream.foreachBatch(write_batch)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        with tempfile.TemporaryDirectory(prefix="stream_phases_") as tmp:
+            dest = os.path.join(tmp, "dest")
+
+            def write_batch(bdf, _bid):
+                bdf.write.mode(wmode).parquet(dest)
+
+            spark.conf.set("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+            try:
+                t0 = time.time()
+                q = (
+                    out_df.writeStream.foreachBatch(write_batch)
+                    .outputMode(mode)
+                    .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                wall = time.time() - t0
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
         print(f"=== run {run}: wall {wall:.2f}s")
         for p in q.recentProgress:
             d = {
