@@ -121,6 +121,12 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> None
     q.awaitTermination()
 
 
+# State-store partition count of a tempdir drain: small and fixed, because
+# the tempdir drain only ever sees the bounded verification corpus (see the
+# comment in drain_to_parquet).
+DRAIN_STATE_PARTITIONS = 8
+
+
 def drain_to_parquet(
     df: DataFrame,
     output_mode: str = "append",
@@ -149,7 +155,6 @@ def drain_to_parquet(
     tempdir default is reclaimed at interpreter exit.
     """
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -175,15 +180,12 @@ def drain_to_parquet(
     # whose pinned partitioning must not be fought) and the session conf
     # is left untouched there. Emitted rows are state-partitioning-
     # independent (hash distribution of keys only; config-invariance
-    # gate holds at 8 vs 32 vs 200). Knob: SPARK_GRAFT_STREAM_SHUFFLE.
+    # gate holds at 8 vs 32 vs 200). The count is DRAIN_STATE_PARTITIONS.
     spark = df.sparkSession
     tune_state = not caller_owns and checkpoint is None
     if tune_state:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(DRAIN_STATE_PARTITIONS))
     try:
         q = (
             df.writeStream.foreachBatch(write_batch)

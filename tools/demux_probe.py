@@ -40,11 +40,12 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-ROOT = "/root/repo/.scale_dat"
+ROOT = os.path.join(REPO, ".scale_dat")
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from fixtures_cspro import DCF_TEXT  # noqa: E402  (the pytest fixture dict)
 
 # Balanced tiers: (name, total_lines, n_surveys). 4 lines per household
@@ -407,7 +408,7 @@ def main() -> None:
         *wide_rows,
         f"\n{wide_verdict}; probe asserts ratio > 0.65.",
     ]
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
 
 
